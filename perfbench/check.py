@@ -257,7 +257,6 @@ def compare_slt(got_rows, expected, rowsort):
 
 
 def check_statements(spec, ops, run_dir, errors):
-    failed = 0
     for o in ops:
         if o["op"] == "round":
             continue
@@ -266,34 +265,31 @@ def check_statements(spec, ops, run_dir, errors):
             if o["ok"]:
                 errors.append(f"{o['op']}: expected an error, statement succeeded")
             continue
-        if not o["ok"]:
-            failed += 1
-            errors.append(f"{o['op']}: failed: {o.get('error', '')[:200]}")
+        if not o["ok"] or s["kind"] != "query":
             continue
-        if s["kind"] == "query":
-            got = read_json(os.path.join(run_dir, "out", f"{o['op']}.json"))
-            if "expected" in s:
-                msg = compare_slt(got, s["expected"], s.get("rowsort", False))
-            elif "expected_rows" in s:
-                msg = compare_rows(got, s["expected_rows"])
-            else:
-                continue  # an end-state read: the workload's end checks compare it
-            if msg:
-                errors.append(f"{o['op']}: {msg}")
-    return failed
+        got = read_json(os.path.join(run_dir, "out", f"{o['op']}.json"))
+        if "expected" in s:
+            msg = compare_slt(got, s["expected"], s.get("rowsort", False))
+        elif "expected_rows" in s:
+            msg = compare_rows(got, s["expected_rows"])
+        else:
+            continue  # an end-state read: the workload's end checks compare it
+        if msg:
+            errors.append(f"{o['op']}: {msg}")
 
 
 def check(spec, ops, run_dir, cpus):
-    errors = []
+    """Operations that failed, and what is wrong with the others' results."""
     work = [o for o in ops if o["op"] != "round"]
+    stmts = spec.get("statements", {})
+    failed = [o for o in work if not o["ok"] and not stmts.get(o["op"], {}).get("error")]
+    errors = []
     if spec["kind"] == "olap":
-        failed = sum(1 for o in work if not o["ok"])
-        errors += [f"{o['op']} pass {o['pass']}: failed: {o.get('error', '')[:200]}"
-                   for o in work if not o["ok"]]
         check_olap(spec, ops, run_dir, cpus, errors)
     else:
-        failed = check_statements(spec, ops, run_dir, errors)
+        check_statements(spec, ops, run_dir, errors)
         if spec.get("end_checks"):
             spec["end_checks"](ops, run_dir, errors, cpus)
-    wrong = [e for e in errors if ": failed: " not in e]
-    return {"correct": not wrong, "attempted": len(work), "failed": failed, "errors": errors}
+    return {"correct": not errors, "attempted": len(work), "failed": len(failed),
+            "errors": [f"{o['op']} (round {o['pass']}) failed: {o.get('error', '')[:200]}"
+                       for o in failed] + errors}

@@ -179,6 +179,11 @@ def main():
             ops = [json.loads(l) for l in f if l.strip()]
         summary = check.read_json(os.path.join(run_dir, "summary.json"))
         result = check.check(spec, ops, run_dir, CPUS)
+        if a.trace:
+            # the traced run's one record per operation outlives the run
+            os.makedirs(os.path.join(BUILD, "traces"), exist_ok=True)
+            shutil.copy(os.path.join(run_dir, "ops.jsonl"),
+                        os.path.join(BUILD, "traces", f"{a.workload}-seed{a.seed}.jsonl"))
         setup_s = (summary["first_op_epoch_ms"] / 1000.0 - T_START) - one_time
         metrics = (workloads.layer_metrics(spec, ops, summary, run_dir) if a.trace
                    else workloads.end_to_end(spec, ops, summary, setup_s))
