@@ -4,15 +4,13 @@
   (perfbench/oracle/<query>.sql over the same parquet files), or against
   properties recomputed from the inputs; every warm pass must return the
   first pass's result (same digest).
-- statements: each `query` against the rows its slt file records, each
-  `statement` for its expected success or error; table_dml results
-  against a DuckDB replay of the same stream (workloads.py).
+- statements: table_dml's query results against a DuckDB replay of the
+  same stream (dml.py).
 
 An operation that throws counts in `failed`; a wrong result makes
 `correct` false. Nothing is dropped from `attempted`.
 """
 import json
-import math
 import os
 
 import duckdb
@@ -45,8 +43,14 @@ def fingerprints(data_dir, tables, cpus):
 
 # ---- result values -------------------------------------------------------
 
+DAY_US = 86_400_000_000
+
+
 def canon(v):
-    """One cell as a hashable value both sides agree on."""
+    """One cell as a hashable value both sides agree on. A date is its
+    midnight timestamp, as the repo's own oracle check (scripts/check.py)
+    compares them: DuckDB's date_trunc('day', ts) is a DATE, Spark's a
+    TIMESTAMP."""
     if v is None:
         return None
     if isinstance(v, bool):
@@ -63,7 +67,7 @@ def canon(v):
         if set(v) == {"ts"}:
             return ("ts", v["ts"])
         if set(v) == {"date"}:
-            return ("date", v["date"])
+            return ("ts", v["date"] * DAY_US)
         return tuple(canon(x) for x in v.values())
     if isinstance(v, (list, tuple)):
         return tuple(canon(x) for x in v)
@@ -77,7 +81,7 @@ def canon(v):
         d = v - datetime.datetime(1970, 1, 1)
         return ("ts", (d.days * 86400 + d.seconds) * 1_000_000 + d.microseconds)
     if isinstance(v, datetime.date):
-        return ("date", (v - datetime.date(1970, 1, 1)).days)
+        return ("ts", (v - datetime.date(1970, 1, 1)).days * DAY_US)
     if hasattr(v, "item"):
         return canon(v.item())
     return str(v)
@@ -147,48 +151,6 @@ def check_olap(spec, ops, run_dir, cpus, errors):
 
 # ---- statements -----------------------------------------------------------
 
-def parse_slt(text):
-    """sqllogictest cases: statement ok|error, query <types> [rowsort]."""
-    lines = text.split("\n")
-    out, i = [], 0
-
-    def collect(j, stop):
-        buf, in_dollar = [], False
-        while j < len(lines) and (in_dollar or not stop(lines[j])):
-            if lines[j].count("$$") % 2 == 1:
-                in_dollar = not in_dollar
-            buf.append(lines[j])
-            j += 1
-        return "\n".join(buf).strip(), j
-
-    while i < len(lines):
-        l = lines[i].strip()
-        if not l or l.startswith("#"):
-            i += 1
-        elif l.startswith("statement") or l.startswith("query error"):
-            sql, j = collect(i + 1, lambda s: not s.strip())
-            out.append({"kind": "statement", "sql": sql, "line": i + 1,
-                        "error": "error" in l})
-            i = j
-        elif l.startswith("query"):
-            rowsort = "rowsort" in l.split()
-            sql, j = collect(i + 1, lambda s: s.strip() in ("----", ""))
-            if j >= len(lines) or lines[j].strip() != "----":
-                out.append({"kind": "statement", "sql": sql, "line": i + 1, "error": False})
-                i = j
-                continue
-            k, exp = j + 1, []
-            while k < len(lines) and lines[k].strip():
-                exp.append(lines[k])
-                k += 1
-            out.append({"kind": "query", "sql": sql, "line": i + 1, "expected": exp,
-                        "rowsort": rowsort})
-            i = k
-        else:
-            raise ValueError(f"slt parse error at line {i + 1}: {l}")
-    return out
-
-
 def stmt_class(sql):
     w = sql.lstrip("( \n").split(None, 1)[0].lower() if sql.strip() else ""
     if w in ("select", "with", "values", "show", "describe", "desc", "explain"):
@@ -200,80 +162,15 @@ def stmt_class(sql):
     return "ddl"
 
 
-def slt_cell(v):
-    """The slt text rendering of one result cell."""
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    if isinstance(v, float):
-        if math.isnan(v) or math.isinf(v):
-            return {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}[str(v)]
-        s = f"{v:.6f}".rstrip("0").rstrip(".")
-        return "0" if s == "-0" else s
-    if isinstance(v, dict) and set(v) == {"ts"}:
-        import datetime
-        t = datetime.datetime(1970, 1, 1) + datetime.timedelta(microseconds=v["ts"])
-        return t.strftime("%Y-%m-%d %H:%M:%S.%f")
-    if isinstance(v, dict) and set(v) == {"date"}:
-        import datetime
-        return (datetime.date(1970, 1, 1) + datetime.timedelta(days=v["date"])).isoformat()
-    if isinstance(v, list):
-        return "[" + ",".join(slt_cell(x) for x in v) + "]"
-    return "" if v == "" else str(v)
-
-
-def _cells_match(e, g):
-    if e == g:
-        return True
-    ec, gc = e.split("\t"), g.split("\t")
-    if len(ec) != len(gc):
-        return False
-    for a, b in zip(ec, gc):
-        if a == b:
-            continue
-        try:
-            x, y = float(a), float(b)
-        except ValueError:
-            return False
-        if not (x == y or abs(x - y) <= 1e-6 * max(1.0, abs(x), abs(y))):
-            return False
-    return True
-
-
-def compare_slt(got_rows, expected, rowsort):
-    def norm(r):
-        return "\t".join("" if c == "(empty)" else c for c in r.split("\t"))
-    got = [norm("\t".join(slt_cell(c) for c in r)) for r in got_rows]
-    exp = [norm(r) for r in expected]
-    if rowsort:
-        got, exp = sorted(got), sorted(exp)
-    if len(got) != len(exp):
-        return f"{len(got)} rows, expected {len(exp)}"
-    for g, e in zip(got, exp):
-        if not _cells_match(e, g):
-            return f"got {g!r} expected {e!r}"
-    return None
-
-
 def check_statements(spec, ops, run_dir, errors):
     for o in ops:
-        if o["op"] == "round":
+        if o["op"] == "round" or not o["ok"]:
             continue
         s = spec["statements"][o["op"]]
-        if s.get("error"):
-            if o["ok"]:
-                errors.append(f"{o['op']}: expected an error, statement succeeded")
-            continue
-        if not o["ok"] or s["kind"] != "query":
-            continue
-        got = read_json(os.path.join(run_dir, "out", f"{o['op']}.json"))
-        if "expected" in s:
-            msg = compare_slt(got, s["expected"], s.get("rowsort", False))
-        elif "expected_rows" in s:
-            msg = compare_rows(got, s["expected_rows"])
-        else:
+        if s["kind"] != "query" or s.get("final"):
             continue  # an end-state read: the workload's end checks compare it
+        got = read_json(os.path.join(run_dir, "out", f"{o['op']}.json"))
+        msg = compare_rows(got, s["expected_rows"])
         if msg:
             errors.append(f"{o['op']}: {msg}")
 
@@ -281,8 +178,7 @@ def check_statements(spec, ops, run_dir, errors):
 def check(spec, ops, run_dir, cpus):
     """Operations that failed, and what is wrong with the others' results."""
     work = [o for o in ops if o["op"] != "round"]
-    stmts = spec.get("statements", {})
-    failed = [o for o in work if not o["ok"] and not stmts.get(o["op"], {}).get("error")]
+    failed = [o for o in work if not o["ok"]]
     errors = []
     if spec["kind"] == "olap":
         check_olap(spec, ops, run_dir, cpus, errors)

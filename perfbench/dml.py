@@ -1,9 +1,10 @@
 """table_dml: a seeded SQL stream over three tables, and its DuckDB replay.
 
 The stream is generated here from the seed; the engine receives only the
-statement text (through GraftSql.execute). Every statement is also
-applied to a DuckDB copy of the tables, which gives the expected rows of
-each query and the expected state of each table after each statement.
+statement text (through GraftSql.execute). After the engine has exited,
+`Stream.replay` applies every statement to a DuckDB copy of the tables,
+which gives the expected rows of each query and the expected state of
+each table after each statement; no DuckDB work falls in a timed phase.
 
 A round has the same slots every time, with seeded values: single-row
 INSERTs, one INSERT ... SELECT, one UPDATE, one DELETE, one MERGE INTO,
@@ -34,52 +35,57 @@ NEW_KEY_BASE = 10 ** 12
 
 
 class Stream:
-    def __init__(self, seed, data_dir, cpus):
+    def __init__(self, seed, data_dir):
         self.rnd = random.Random(seed)
         self.data = data_dir
-        self.db = check.connect(cpus)
+        self.db = None        # the DuckDB replay, made by replay()
         self.version = {}     # table -> current snapshot version
         self.commits = {}     # table -> [statement id of each committed version]
-        self.snaps = {}       # (table, version) -> name of the DuckDB copy
         self.stmts = []
         self.next_key = NEW_KEY_BASE
 
     # -- bookkeeping ----------------------------------------------------------
 
-    def _snap(self, t):
-        name = f"snap_{t}_{self.version[t]}"
-        if (t, self.version[t]) not in self.snaps:
-            self.db.execute(f"CREATE TABLE {name} AS SELECT * FROM {t}")
-            self.snaps[(t, self.version[t])] = name
-        return self.version[t]
-
-    def _rows(self, sql):
-        return self.db.execute(sql).fetchall()
+    @staticmethod
+    def snap(t, v):
+        """The replay's copy of table t at snapshot v."""
+        return f"snap_{t}_{v}"
 
     def state(self, t, v):
         """The replay's rows of table t at snapshot v."""
-        return self._rows(f"SELECT k, g, v, s FROM {self.snaps[(t, v)]}")
+        return self.db.execute(f"SELECT k, g, v, s FROM {self.snap(t, v)}").fetchall()
 
     def add(self, sql, cls, rnd=None, table=None, duck=None, query=None, phase=None):
+        """One statement; `duck` is its replay, `query` its expected rows."""
         sid = f"s{len(self.stmts)}"
-        s = {"id": sid, "sql": sql, "kind": "query" if query else "statement",
-             "cls": cls, "error": False}
+        s = {"id": sid, "sql": sql, "kind": "query" if query else "statement", "cls": cls,
+             "duck": [duck] if isinstance(duck, str) else list(duck or [])}
         if rnd is not None:
             s["round"] = rnd
-            s["reset"] = False
             s["slot"] = f"{cls}-{sum(1 for x in self.stmts if x.get('round') == rnd)}"
         if phase:
             s["phase"] = phase
-        for d in ([duck] if isinstance(duck, str) else duck or []):
-            self.db.execute(d)
         if query:
-            s["expected_rows"] = self._rows(query)
+            s["oracle"] = query
         if table:
             self.version[table] = self.version.get(table, -1) + 1
             self.commits.setdefault(table, []).append(sid)
-            self._snap(table)
+            s["commit"] = (table, self.version[table])
         self.stmts.append(s)
         return s
+
+    def replay(self, cpus):
+        """Applies the stream to DuckDB, in order: each query's expected
+        rows, and a copy of each table after each of its commits."""
+        self.db = check.connect(cpus)
+        for s in self.stmts:
+            for d in s["duck"]:
+                self.db.execute(d)
+            if "oracle" in s:
+                s["expected_rows"] = self.db.execute(s["oracle"]).fetchall()
+            if "commit" in s:
+                t, v = s["commit"]
+                self.db.execute(f"CREATE TABLE {self.snap(t, v)} AS SELECT * FROM {t}")
 
     # -- the stream -----------------------------------------------------------
 
@@ -133,12 +139,12 @@ class Stream:
         v0 = start["ta"]
         q = "SELECT g, count(*) AS n, sum(v) AS sv FROM {t} GROUP BY g"
         self.add(q.format(t=f"ta AT (SNAPSHOT => {v0})"), "select", r,
-                 query=q.format(t=self.snaps[("ta", v0)]))
+                 query=q.format(t=self.snap("ta", v0)))
         a, b = start["tb"], self.version["tb"]
         q = (f"SELECT `change$action` AS action, count(*) AS n, sum(v) AS sv FROM tb "
              f"CHANGES (INFORMATION => DEFAULT) AT (SNAPSHOT => {a}) END (SNAPSHOT => {b}) "
              f"GROUP BY 1")
-        old, new = self.snaps[("tb", a)], self.snaps[("tb", b)]
+        old, new = self.snap("tb", a), self.snap("tb", b)
         self.add(q, "select", r, query=(
             f"SELECT 'INSERT' AS action, count(*), sum(v) FROM "
             f"(SELECT * FROM {new} EXCEPT ALL SELECT * FROM {old}) HAVING count(*) > 0 "
@@ -154,8 +160,8 @@ class Stream:
             s["kind"], s["final"] = "query", t
 
 
-def generate(seed, data_dir, rounds, cpus):
-    s = Stream(seed, data_dir, cpus)
+def generate(seed, data_dir, rounds):
+    s = Stream(seed, data_dir)
     s.load()
     for r in range(rounds):
         s.round(r)

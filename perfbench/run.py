@@ -90,9 +90,9 @@ def classpath():
 
 
 def run_jvm(args, run_dir, timeout):
-    # java.io.tmpdir outlives the run: the engine keeps its persisted ANN
-    # indexes there (graft_index/), as a user's would between sessions
-    tmp = os.path.join(BUILD, "tmp")
+    # java.io.tmpdir is the run's own: the engine's persisted ANN indexes
+    # (graft_index/) are built by this run's code and go with the run
+    tmp = os.path.join(run_dir, "tmp")
     local = os.path.join(run_dir, "spark-local")
     os.makedirs(tmp, exist_ok=True)
     os.makedirs(local, exist_ok=True)
@@ -117,14 +117,6 @@ def run_jvm(args, run_dir, timeout):
             os.killpg(p.pid, 9)
             p.wait()
             rc = "timeout"
-        for f in os.listdir(tmp):
-            path = os.path.join(tmp, f)
-            if f == "graft_index":
-                continue
-            if os.path.isdir(path):
-                shutil.rmtree(path, ignore_errors=True)
-            else:
-                os.remove(path)
     if rc != 0:
         with open(log_path, errors="replace") as f:
             sys.stderr.write(f.read()[-6000:])
@@ -134,16 +126,22 @@ def run_jvm(args, run_dir, timeout):
 def regen_oracle():
     ensure_build()
     names = sorted({q for w in workloads.OLAP.values() for q in w["queries"]})
-    tmp = os.path.join(BUILD, "oracle_regen")
-    shutil.rmtree(tmp, ignore_errors=True)
-    run_jvm(["--workload", "oracle-sql", "--queries", ",".join(names), "--out", tmp],
-            BUILD, 120)
-    dst = os.path.join(HERE, "oracle")
-    os.makedirs(dst, exist_ok=True)
-    for f in sorted(os.listdir(tmp)):
-        shutil.copy(os.path.join(tmp, f), os.path.join(dst, f))
-        print(f"oracle/{f}")
-    shutil.rmtree(tmp, ignore_errors=True)
+    run_dir = os.path.join(BUILD, "oracle_regen")
+    out = os.path.join(run_dir, "out")
+    shutil.rmtree(run_dir, ignore_errors=True)
+    os.makedirs(run_dir)
+    try:
+        run_jvm(["--workload", "oracle-sql", "--queries", ",".join(names), "--out", out],
+                run_dir, 120)
+        dst = os.path.join(HERE, "oracle")
+        os.makedirs(dst, exist_ok=True)
+        for f in os.listdir(dst):  # a query no longer measured loses its copy
+            os.remove(os.path.join(dst, f))
+        for f in sorted(os.listdir(out)):
+            shutil.copy(os.path.join(out, f), os.path.join(dst, f))
+            print(f"oracle/{f}")
+    finally:
+        shutil.rmtree(run_dir, ignore_errors=True)
 
 
 def main():
@@ -178,6 +176,8 @@ def main():
         with open(os.path.join(run_dir, "ops.jsonl")) as f:
             ops = [json.loads(l) for l in f if l.strip()]
         summary = check.read_json(os.path.join(run_dir, "summary.json"))
+        if spec.get("replay"):
+            spec["replay"]()  # the DuckDB replay runs once the engine has exited
         result = check.check(spec, ops, run_dir, CPUS)
         if a.trace:
             # the traced run's one record per operation outlives the run

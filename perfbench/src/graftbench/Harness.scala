@@ -316,16 +316,8 @@ final class Run(dir: Path, rounds: Int, trace: Boolean, cpus: Int) {
   def statements(): Unit = {
     val stmts = Files.readAllLines(dir.resolve("statements.jsonl"), UTF_8).asScala
       .filter(_.trim.nonEmpty).map(l => mapper.readTree(l)).toSeq
-    var s = System.nanoTime()
-    val wh = dir.resolve("wh")
-    var whSeq = 0
-    var g: graft.GraftSql = null
-    def fresh(): Unit = {
-      if (g != null) g.resetSessionSettings()
-      whSeq += 1
-      g = graft.GraftSql(spark, wh.resolve(s"w$whSeq").toString)
-    }
-    fresh()
+    val s = System.nanoTime()
+    val g = graft.GraftSql(spark, dir.resolve("wh").toString)
     // load statements (table_dml's base tables) run before the clock
     val (load, rest) = stmts.partition(_.path("phase").asText == "load")
     load.foreach(st => runStatement(g, st, pass = -1))
@@ -335,10 +327,7 @@ final class Run(dir: Path, rounds: Int, trace: Boolean, cpus: Int) {
     val post = rest.filterNot(_.has("round"))
     for ((r, sts) <- byRound.take(rounds)) {
       val c0 = cpu(); val rs = System.nanoTime()
-      sts.foreach { st =>
-        if (st.path("reset").asBoolean(false)) fresh()
-        runStatement(g, st, pass = r)
-      }
+      sts.foreach(st => runStatement(g, st, pass = r))
       writeOp("op" -> "round", "pass" -> r, "ok" -> true, "ms" -> ms(rs), "cpu_s" -> (cpu() - c0))
     }
     retainedHeap()

@@ -8,38 +8,41 @@ operation; this module turns those lines into metrics.
 import json
 import math
 import os
-import random
 import statistics
 
 import check
 import dml
 
 TESTDATA = "/root/testdata"
-SLT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                       "src", "test", "resources", "slt_sql")
 
-# The headline queries in olap_sf01: sub-second at sf0.1 on 4 cores, so
-# DataFrame build, planning and per-job overhead are a large share. The
-# TPC-DS, ClickBench, hits_top_props and full-text headline queries are
-# left out: they stage their data under fixed /tmp paths (Tpcds.scala:38,
-# ClickBench.scala:32, HitsQueries.scala:27, TextQueries.scala:382), which
-# two checkouts under comparison would share.
+# olap_sf01: 23 of the 75 headline queries (SparkEntry.headline), in one
+# fixed order. Every headline query ran once cold and twice warm on 4
+# cores (sf0.1); kept are those that stage nothing and took at most
+# 450 ms warm, where DataFrame build, planning and per-job overhead are
+# the largest share, plus the four without a DuckDB oracle (checked by
+# property). Left out:
+#  - the 20 TPC-DS, 5 ClickBench, hits_top_props, txt_phrase and
+#    txt_fulltext queries: they stage data under fixed /tmp paths
+#    (Tpcds.scala:38, ClickBench.scala:32, HitsQueries.scala:27,
+#    TextQueries.scala:382,424) that two checkouts would share;
+#  - 23 slower ones, for the run budget (4 + 22 x workloads runs in
+#    3,420 s): all 46 that stage nothing took 39.9 s cold and 27 s warm a
+#    pass, these 23 take 12.5 s and 8.7 s. README.md lists them.
 OLAP = {
     "olap_sf01": {
         "data": f"{TESTDATA}/sf0.1",
-        "queries": ["tpch_q3", "tpch_q5", "tpch_q6", "win_topn_per_group",
-                    "vec_knn_lsh", "vec_knn_ivf", "vec_knn_hnsw", "txt_minhash_lsh"],
+        "queries": [
+            "tpch_q2", "tpch_q6", "tpch_q10", "tpch_q12", "tpch_q13", "tpch_q14",
+            "tpch_q17", "tpch_q19", "tpch_q22", "join_range_bands", "agg_basic",
+            "win_topn_per_group", "srf_lateral_words", "evt_window_funnel",
+            "txt_dedup_exact", "txt_quality", "txt_minhash_lsh", "vec_knn_brute",
+            "vec_knn_lsh", "vec_knn_ivf", "vec_knn_hnsw", "hits_top_users",
+            "geo_radius_join"],
     },
 }
 
-# sql_stmt: one ydb_select file (CREATE, 30 one-row INSERTs, then small
-# SELECTs) through GraftSql; at ~0.3 s a statement on 4 cores, the first
-# SLT_QUERIES queries keep a round within the run's time.
-SLT_FILE = "ydb_select1_1.slt"
-SLT_QUERIES = 8
-
 # seconds of one warm round on a 4-core reference machine
-ROUND_S = {"olap_sf01": 4.5, "sql_stmt": 2.5, "table_dml": 7.0}
+ROUND_S = {"olap_sf01": 10.0, "table_dml": 8.0}
 ALL = set(ROUND_S)
 
 
@@ -65,7 +68,6 @@ def rounds(name, seconds):
 
 
 def prepare(name, seed, n_rounds, run_dir, cpus):
-    rnd = random.Random(seed)
     if name in OLAP:
         w = OLAP[name]
         _pinned(w["data"], check.TABLES, cpus)
@@ -75,25 +77,12 @@ def prepare(name, seed, n_rounds, run_dir, cpus):
         with open(os.path.join(run_dir, "queries.txt"), "w") as f:
             f.write("\n".join(qs) + "\n")
         return {"name": name, "kind": "olap", "data": w["data"]}
-    if name == "sql_stmt":
-        # round 0 replays the file in a fresh warehouse; the warm rounds
-        # replay its queries against the tables round 0 built
-        with open(os.path.join(SLT_DIR, SLT_FILE)) as f:
-            cases = check.parse_slt(f.read())
-        n_setup = next(i for i, c in enumerate(cases) if c["kind"] == "query")
-        setup, queries = cases[:n_setup], cases[n_setup:n_setup + SLT_QUERIES]
-        rnd.shuffle(queries)
-        stmts = []
-        for r in range(n_rounds):
-            for i, c in enumerate((setup if r == 0 else []) + queries):
-                stmts.append(dict(c, id=f"r{r}-{c['line']}", round=r, slot=str(c["line"]),
-                                  reset=(r == 0 and i == 0), cls=check.stmt_class(c["sql"])))
-        return _statements(name, run_dir, stmts)
     if name == "table_dml":
         data = f"{TESTDATA}/sf0.01"
         _pinned(data, ["orders", "lineitem", "customer"], cpus)
-        stream = dml.generate(seed, data, n_rounds, cpus)
+        stream = dml.generate(seed, data, n_rounds)
         spec = _statements(name, run_dir, stream.stmts)
+        spec["replay"] = lambda: stream.replay(cpus)
 
         def end_checks(ops, run_dir_, errors, cpus_):
             wh = check.read_json(os.path.join(run_dir_, "summary.json"))["warehouse"]
@@ -106,8 +95,8 @@ def prepare(name, seed, n_rounds, run_dir, cpus):
 def _statements(name, run_dir, stmts):
     with open(os.path.join(run_dir, "statements.jsonl"), "w") as f:
         for s in stmts:
-            f.write(json.dumps({k: s[k] for k in ("id", "sql", "kind", "round", "reset", "cls",
-                                                  "phase") if k in s}) + "\n")
+            f.write(json.dumps({k: s[k] for k in ("id", "sql", "kind", "round", "cls", "phase")
+                                if k in s}) + "\n")
     return {"name": name, "kind": "stmt", "statements": {s["id"]: s for s in stmts}}
 
 
